@@ -218,6 +218,50 @@ def test_lookup_filter_pushdown(server, monkeypatch):
     assert look["results"][0]["tags"]["host"] == "host2"
 
 
+def test_lookup_paging_params_parse_like_atoi(server):
+    """limit/startIndex parse with atoi like /api/suggest's max
+    (tsdb.cpp:2619-2624): a non-numeric value is 0, a numeric prefix
+    counts, a negative startIndex starts at the first series and a
+    negative limit pages nothing — never a 500."""
+    _post(server, "/api/put", "put page.metric 1704067200 1 host=a\n"
+                              "put page.metric 1704067200 2 host=b\n"
+                              "put page.metric 1704067200 3 host=c\n")
+
+    def look(query):
+        r = _get(server, f"/api/search/lookup?m=page.metric&{query}")
+        assert r["totalResults"] == 3
+        return r["limit"], r["startIndex"], [x["tags"]["host"] for x in r["results"]]
+
+    assert look("limit=abc") == (0, 0, [])
+    assert look("limit=2xyz") == (2, 0, ["a", "b"])
+    assert look("startIndex=junk") == (25, 0, ["a", "b", "c"])
+    assert look("startIndex=1abc&limit=5") == (5, 1, ["b", "c"])
+    assert look("startIndex=-2&limit=2") == (2, 0, ["a", "b"])
+    assert look("limit=-1") == (0, 0, [])
+
+
+def test_store_add_dt_is_utc_day(spark):
+    """A buffered point's dt is the UTC day of its ts, from a
+    timezone-aware conversion: the last millisecond of a day and the first
+    of the next fall on either side of the boundary."""
+    import datetime as dt
+    import warnings
+
+    from ticktock_spark.api.http import TsdbStore
+
+    store = TsdbStore(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        store.add([
+            {"metric": "d.m", "ts": ts, "value": 1.0, "tags": {}}
+            for ts in (1704153599999, 1704153600000, -1, 0)
+        ])
+    assert [r["dt"] for r in store._buffer] == [
+        dt.date(2024, 1, 1), dt.date(2024, 1, 2),
+        dt.date(1969, 12, 31), dt.date(1970, 1, 1),
+    ]
+
+
 def test_http_response_too_large_413(spark):
     """Over-cap query responses answer 413 with an empty plain body —
     the reference's fixed response buffer overflow (query.cpp:1641-1646);

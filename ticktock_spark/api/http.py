@@ -51,6 +51,7 @@ from ticktock_spark.sources.parsers import (
     parse_put_json,
     parse_put_line,
 )
+from ticktock_spark.session import local_dataframe
 
 FILTER_DESCRIPTIONS = {
     name: {"examples": f"host={name}(...)", "description": desc}
@@ -64,6 +65,14 @@ FILTER_DESCRIPTIONS = {
         ("regexp", "regular expression full match"),
     ]
 }
+
+
+def _atoi(params: dict, name: str, default: int) -> int:
+    """A numeric query parameter read the way the reference reads them,
+    with atoi (tsdb.cpp:2619-2624): a non-numeric value yields 0 and a
+    numeric prefix is honored ("12abc" → 12) — never a 500."""
+    m = _re.match(r"[+-]?\d+", (params.get(name) or [str(default)])[0].strip())
+    return int(m.group(0)) if m else 0
 
 
 class TsdbStore:
@@ -215,7 +224,9 @@ class TsdbStore:
                         value=dp["value"],
                         tags=tags,
                         seq=self._seq,
-                        dt=_dt.datetime.utcfromtimestamp(dp["ts"] / 1000).date(),
+                        dt=_dt.datetime.fromtimestamp(
+                            dp["ts"] / 1000, _dt.timezone.utc
+                        ).date(),
                     )
                 )
         return len(dps)
@@ -227,9 +238,9 @@ class TsdbStore:
         if self.base is not None:
             parts.append(self.base)
         if buf:
-            parts.append(self.spark.createDataFrame(buf, DATAPOINTS_SCHEMA))
+            parts.append(local_dataframe(self.spark, buf, DATAPOINTS_SCHEMA))
         if not parts:
-            return self.spark.createDataFrame([], DATAPOINTS_SCHEMA)
+            return local_dataframe(self.spark, [], DATAPOINTS_SCHEMA)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -261,9 +272,9 @@ class TsdbStore:
                         dim.unpersist()
             parts.append(self._series_base)
         if buf:
-            parts.append(self.spark.createDataFrame(buf, SERIES_SCHEMA))
+            parts.append(local_dataframe(self.spark, buf, SERIES_SCHEMA))
         if not parts:
-            return self.spark.createDataFrame([], SERIES_SCHEMA)
+            return local_dataframe(self.spark, [], SERIES_SCHEMA)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -291,7 +302,7 @@ class TsdbStore:
             if not buf:
                 return 0
             (
-                self.spark.createDataFrame(buf, DATAPOINTS_SCHEMA)
+                local_dataframe(self.spark, buf, DATAPOINTS_SCHEMA)
                 .write.mode("append")
                 .partitionBy("dt")
                 .parquet(self.table_path)
@@ -629,11 +640,7 @@ class _Handler(BaseHTTPRequestHandler):
             raise _BadRequest("suggest requires q")
         typ = params["type"][0]
         q = params["q"][0]
-        # the reference parses max with atoi (tsdb.cpp:2619-2624):
-        # a non-numeric value yields 0 (→ empty 200), a numeric prefix
-        # is honored ("12abc" → 12) — never a 500
-        m = _re.match(r"[+-]?\d+", (params.get("max") or ["1000"])[0].strip())
-        mx = int(m.group(0)) if m else 0
+        mx = _atoi(params, "max", 1000)
         df = self.store.series_dim()
         if typ == "metrics":
             col = df.select(F.col("metric").alias("v"))
@@ -651,8 +658,9 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _lookup(self, params) -> dict:
         m = (params.get("m") or [""])[0]
-        limit = int((params.get("limit") or ["25"])[0])
-        start = int((params.get("startIndex") or ["0"])[0])
+        # a negative limit pages nothing; a negative startIndex starts at 0
+        limit = max(_atoi(params, "limit", 25), 0)
+        start = max(_atoi(params, "startIndex", 0), 0)
         metric, tag_filters = m, {}
         if "{" in m:
             metric = m[: m.index("{")]

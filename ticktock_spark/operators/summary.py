@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ticktock_spark.session import local_dataframe
+
 MIN_MS = 60_000
 DAY_MS = 86_400_000
 
@@ -170,8 +172,8 @@ def histogram_quantiles(
         F.sum("n").over(W.partitionBy(*groups).orderBy("bin")).alias("cum"),
         F.sum("n").over(W.partitionBy(*groups)).alias("nn"),
     )
-    qs = hist.sparkSession.createDataFrame(
-        [(float(q),) for q in quantiles], "q double"
+    qs = local_dataframe(
+        hist.sparkSession, [(float(q),) for q in quantiles], "q double"
     )
     cand = cw.join(F.broadcast(qs), F.col("cum") >= F.col("q") * F.col("nn"))
     first = cand.groupBy(*groups, "q", "nn").agg(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ticktock_spark.pipeline.text import tokens
+from ticktock_spark.session import local_dataframe
 
 #: hex-pair bucket of a token: 256 buckets, portable across engines.
 BIAS_BUCKET = "__bias__"
@@ -110,8 +111,8 @@ def lr_train(
     n_docs = feats.select(id_col).distinct().count()
     weights: dict[str, float] = {}
     for _ in range(steps):
-        wdf = spark.createDataFrame(
-            list(weights.items()) or [], "bucket string, w double"
+        wdf = local_dataframe(
+            spark, list(weights.items()), "bucket string, w double"
         )
         margins = (
             feats.join(F.broadcast(wdf), "bucket", "left")
@@ -147,7 +148,7 @@ def lr_score(
     """σ(w·x) per doc from a trained weight table (broadcast join —
     the inference pass a 100 TB corpus runs scan-side)."""
     spark = feats.sparkSession
-    wdf = spark.createDataFrame(list(weights.items()), "bucket string, w double")
+    wdf = local_dataframe(spark, list(weights.items()), "bucket string, w double")
     return (
         feats.join(F.broadcast(wdf), "bucket", "left")
         .groupBy(id_col)

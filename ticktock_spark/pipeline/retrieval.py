@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ticktock_spark.pipeline.text import tokens
 from ticktock_spark.queries import q6
+from ticktock_spark.session import local_dataframe
 
 
 def _postings(
@@ -197,7 +198,8 @@ def _write_segment(
     ).collect()[0]
     spark = df.sparkSession
     (
-        spark.createDataFrame(
+        local_dataframe(
+            spark,
             [(segment, row["n"], row["tl"])],
             "segment string, n_docs bigint, sum_dl bigint",
         )
@@ -277,8 +279,8 @@ def bm25_index_topk(
     quantize-then-rank rule), pinned by a parity test.
     """
     # driver-bound: ≤ |terms| bucket ids
-    bucket_rows = spark.createDataFrame(
-        [(t,) for t in terms], "tok string"
+    bucket_rows = local_dataframe(
+        spark, [(t,) for t in terms], "tok string"
     ).select(term_bucket(F.col("tok")).alias("b")).distinct().collect()
     buckets = sorted(r["b"] for r in bucket_rows)
     # stats rows are additive per segment — merging them here is what

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ticktock_spark.session import local_dataframe
+
 _SPACE = 16**8  # 8 hex chars
 
 
@@ -398,8 +400,8 @@ def curriculum_schedule(
     as shortfall (no division by zero)."""
     spark = df.sparkSession
     wrows = curriculum_weights(start_weights, end_weights, n_phases)
-    wdf = spark.createDataFrame(
-        wrows, f"phase int, {strata_col} string, weight double"
+    wdf = local_dataframe(
+        spark, wrows, f"phase int, {strata_col} string, weight double"
     )
     per = df.groupBy(strata_col).agg(F.sum(token_col).alias("available_tokens"))
     j = wdf.join(F.broadcast(per), strata_col, "left").select(
@@ -568,7 +570,7 @@ def dsir_weights(
     finally:
         per_doc.unpersist()
     spark = df.sparkSession
-    lmw = spark.createDataFrame(lm_rows, "b string, llr double")
+    lmw = local_dataframe(spark, lm_rows, "b string, llr double")
     # Scoring pass WITHOUT the doc-spine outer join (r11): explode_outer
     # keeps token-less docs as one (doc, tok=NULL) row, whose bucket is
     # NULL — the left join then gives it llr=NULL, sum() skips it

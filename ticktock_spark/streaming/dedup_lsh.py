@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ticktock_spark.pipeline.dedup import _banded_pandas, banded_keys_xxh64, shingles
 from ticktock_spark.pipeline.text import normalize_text
+from ticktock_spark.session import local_dataframe
 
 
 def _banded(
@@ -251,7 +252,7 @@ def streaming_chunk_dedup(
                     F.col("__epoch") != epoch_id
                 )
             except Exception:  # noqa: BLE001 — first batch: no index yet
-                idx = spark.createDataFrame([], "chunk_hash long, __epoch long")
+                idx = local_dataframe(spark, [], "chunk_hash long, __epoch long")
             out = chunk_dedup_incremental(
                 batch, idx, chunk_words=chunk_words,
                 text_col=text_col, id_col=id_col,

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ticktock_spark.operators.drift import categorical_drift, ks_drift
+from ticktock_spark.session import local_dataframe
 
 
 def streaming_drift_monitor(
@@ -64,7 +65,8 @@ def streaming_drift_monitor(
                      r[0]["n_b"], float(r[0]["psi"]), float(r[0]["chi2"]))
                 )
         if rows:
-            spark.createDataFrame(
+            local_dataframe(
+                spark,
                 rows,
                 "epoch bigint, test string, n_ref bigint, n_batch bigint,"
                 " stat double, aux double",
